@@ -1,10 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry entry points.
 
 ``entry(spark)`` — flagship query smoke check at sf0.001.
-``queries()`` — name → (spark, sf_dir) -> DataFrame, one per implemented
-operator from SURVEY.md §2.
-``oracle_sql()`` — name → DuckDB-runnable ANSI SQL equivalent (omitted
-for non-SQL-expressible ops, which get a rows-only check).
+``queries()`` — name → (spark, sf_dir) -> DataFrame, one per oracle entry.
+``oracle_sql()`` — name → DuckDB-runnable SQL with the same result as
+the query of that name; every query has one.
 """
 
 from __future__ import annotations
@@ -14,10 +13,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_realtime_pipeline_spark.plans import dq, gen, kpi, llm, temporal
-from ecommerce_realtime_pipeline_spark.plans._registry_order import (
-    NARRATIVE,
-    REGISTRY_ORDER,
-)
 from ecommerce_realtime_pipeline_spark.plans.dq import DQ_ORACLES
 from ecommerce_realtime_pipeline_spark.plans.gen import GEN_ORACLES
 from ecommerce_realtime_pipeline_spark.plans.llm import LLM_ORACLES
@@ -32,35 +27,29 @@ def entry(spark: SparkSession) -> DataFrame:
     return kpi.top_products_by_revenue(spark, "/root/testdata/sf0.001")
 
 
+#: (plan module, its oracle table) in topic order. Each oracle key names
+#: a function of the same name in its module, so this one tuple is both
+#: the query registry and the oracle table.
+_TOPICS = (
+    (kpi, KPI_ORACLES),
+    (dq, DQ_ORACLES),
+    (temporal, TEMPORAL_ORACLES),
+    (gen, GEN_ORACLES),
+    (llm, LLM_ORACLES),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
+    """name → (spark, sf_dir) -> DataFrame for every query that has an
+    oracle, in topic order (kpi, dq, temporal, gen, llm).
 
-    REGISTRATION ORDER IS THE DRIVER'S SAMPLING ORDER: the external
-    harness checks the FIRST 50 registered queries per round, so the
-    ordering is by verification need, not by topic — and it lives in
-    ONE GENERATED FILE, ``plans/_registry_order.py``, written by
-    ``tools/rotate_window.py`` (fold of every CORRECTNESS_r*.json,
-    oldest evidence first, warmers before dependents, streaming
-    fixtures last; the round number and composition line are gated by
-    ``tests/test_rotate_window.py``). A rotation is a one-file diff;
-    regenerate, don't hand-edit:
-
-        python tools/rotate_window.py
-
-    The generated narrative for the current rotation is appended to
-    this docstring at import time (below).
+    A query is registered by defining its function in a plan module and
+    adding an entry under the same name to that module's oracle table;
+    the name is looked up as an attribute of the module.
     """
-    mods = {"kpi": kpi, "dq": dq, "llm": llm, "gen": gen, "temporal": temporal}
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, ref in REGISTRY_ORDER:
-        mod, fn = ref.split(".", 1)
-        q[name] = getattr(mods[mod], fn)
-    return q
-
-
-# the tool-generated rotation narrative rides the generated module so
-# it can never drift from the order (test-gated)
-queries.__doc__ = (queries.__doc__ or "") + "\n    " + NARRATIVE + "\n    "
+    return {
+        name: getattr(mod, name) for mod, oracles in _TOPICS for name in oracles
+    }
 
 
 def oracle_sql() -> dict[str, str]:
@@ -82,11 +71,5 @@ def oracle_sql() -> dict[str, str]:
     # and re-running them per RECURSIVE iteration (the CC oracles went
     # 12-14 s → <2 s; suite oracle time 77 s → ~25 s). See sqlhints.py.
     return materialize_all(
-        {
-            **KPI_ORACLES,
-            **DQ_ORACLES,
-            **LLM_ORACLES,
-            **GEN_ORACLES,
-            **TEMPORAL_ORACLES,
-        }
+        {name: sql for _, oracles in _TOPICS for name, sql in oracles.items()}
     )

@@ -36,33 +36,6 @@ defenses, per round-8 verdict task 2:
   which serializes pytest → multi-SF sweep → bench instead of letting
   them share the machine.
 
-TRUNCATION-PROOF TAIL (round-10 verdict task 4): the driver records
-only the LAST 2000 chars of stdout, which can slice the full artifact
-mid-JSON and eat the adjudication. The FINAL stdout line is therefore
-a compact summary that always fits; the full artifact is the line
-before it (``tools/close_round.py`` selects the line carrying
-``"metric"`` without ``"bench_summary"``).
-
-DRIVER-READABLE PER-QUERY CHANNEL (round-13 verdict task 1): the
-2000-char tail is a hard cap (BENCH_r02 is the only driver artifact
-whose parsed line ever carried a queries map — 41 queries still fit;
-213 cannot), so PERF_r13 had ``per_query: {}`` and both ``bench_ok``
-flags false. Three additive fixes, all pinned in
-``tests/test_bench_prev.py``:
-
-- the final summary line now carries the driver contract keys
-  (``metric``/``value``/``unit``/``sf``) plus a ``queries`` map with
-  as many of the MOST EXPENSIVE per-query medians as fit under the
-  tail budget (deterministic descending-cost order, so the 32-core
-  and 8-core driver runs share entries and the scaling diff has
-  common keys) and ``queries_truncated`` = how many were dropped;
-- the FULL per-query map is written to
-  ``BENCH_PERQUERY_c{cpus}.json`` next to this script (one file per
-  core count — the driver benches at two), and the summary line
-  carries its absolute path as ``bench_perquery_path``;
-- ``tools/close_round.py`` keeps selecting the full-artifact line
-  (it now skips ``bench_summary`` lines explicitly).
-
 SOLO-ADJUDICATED HEADLINE (round-13 verdict task 5): the r13
 recording's 3-pass medians carried ~56 contention-inflated numbers
 (e.g. docs_text_stats 5.05 s concurrent vs 0.26 s solo — same code).
@@ -909,136 +882,7 @@ def main() -> int:
     if stress is not None:
         out["stress"] = stress
     print(json.dumps(out))
-    # round-13 verdict task 1: the FULL per-query map, at a stable path
-    # the summary line points to (the 2000-char stdout tail cannot carry
-    # 213 queries; a file can carry them all).
-    perquery_path = _write_perquery(out)
-    # FINAL line = compact adjudication summary (the driver keeps only
-    # the last 2000 stdout chars, which can slice the full artifact
-    # mid-JSON — this line always survives whole).
-    print(
-        summary_line(
-            total, len(per_query), _sf_from_dir(SF_DIR),
-            movers, prev_cmp, per_query, solo, env_drift,
-            perquery_path=perquery_path,
-        )
-    )
     return 0
-
-
-#: worst movers carried on the final summary line. 4 (was 8 in r13)
-#: — the mover block now shares the tail budget with the fitted
-#: ``queries`` map, and post-solo-adjudication the flag list is short
-#: signal, not contention noise. Pinned in tests/test_bench_prev.py.
-SUMMARY_MOVERS_CAP = 4
-#: total serialized length target for the final summary line; the
-#: driver keeps the last 2000 chars of stdout, so the line must stay
-#: comfortably inside that window WITH the fitted queries map.
-SUMMARY_LINE_BUDGET = 1700
-
-
-def _write_perquery(out: dict) -> str:
-    """Write the full per-query artifact to a stable path next to this
-    script (round-13 verdict task 1): ``BENCH_PERQUERY_c{cpus}.json``
-    — one file per core count, because the driver benches at two core
-    counts and the scaling diff needs both runs' maps. Returns the
-    absolute path (carried on the summary line as
-    ``bench_perquery_path``); never raises — a read-only checkout must
-    not kill the bench."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_PERQUERY_c{cpus}.json",
-    )
-    doc = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "cpus": int(cpus),
-        "queries": out["queries"],
-        "queries_concurrent_median": out.get("queries_concurrent_median", {}),
-        "solo_sec": out.get("solo_sec", {}),
-        "env_drift": out.get("env_drift"),
-        "movers": out.get("movers", []),
-        "suite_runs_sec": out.get("suite_runs_sec", []),
-    }
-    try:
-        with open(path, "w") as fh:
-            json.dump(doc, fh)
-            fh.write("\n")
-    except OSError as exc:
-        print(f"# perquery artifact not written ({exc})", file=sys.stderr)
-        return ""
-    return path
-
-
-def _fit_queries(per_query: dict, budget: int) -> dict:
-    """The most expensive queries, in deterministic descending-cost
-    order, trimmed so their JSON serialization stays under ``budget``
-    chars. Descending cost (not name order) so the 32-core and 8-core
-    driver runs carry near-identical key sets and the driver's scaling
-    diff has common entries."""
-    ranked = sorted(
-        ((v, n) for n, v in per_query.items() if v is not None),
-        key=lambda t: (-t[0], t[1]),
-    )
-    fitted: dict[str, float] = {}
-    used = 2  # the enclosing {}
-    for v, n in ranked:
-        cost = len(json.dumps({n: v})) - 1  # entry + separating comma
-        if used + cost > budget:
-            break
-        fitted[n] = v
-        used += cost
-    return fitted
-
-
-def summary_line(
-    total, n, sf, movers, prev_cmp, per_query, solo, env_drift=None,
-    perquery_path: str = "",
-) -> str:
-    """The truncation-proof final stdout line. Carries the driver
-    contract keys (``metric``/``value``/``unit``/``sf``) plus a
-    ``queries`` map with as many of the most expensive medians as fit
-    (round-13 verdict task 1), the path to the FULL per-query artifact,
-    the worst SUMMARY_MOVERS_CAP movers by |adj_ratio-1|
-    (environment-adjusted — see ``_movers``), and ``env_drift``. Total
-    length is pinned under SUMMARY_LINE_BUDGET so the line can never
-    outgrow the driver's 2000-char window."""
-    def _key(q):
-        row = prev_cmp.get(q, {})
-        return -abs((row.get("adj_ratio") or row.get("ratio") or 1.0) - 1.0)
-
-    worst = sorted(movers, key=_key)[:SUMMARY_MOVERS_CAP]
-    ratios = [c["ratio"] for c in prev_cmp.values()]
-    base = {
-        "bench_summary": True,
-        "metric": "suite_median_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "suite_sec": total,
-        "n": n,
-        "sf": sf,
-        "worst_ratio": max(ratios) if ratios else None,
-        "env_drift": env_drift,
-        "bench_perquery_path": perquery_path,
-        "movers": {
-            m: {
-                "concurrent": per_query.get(m),
-                "solo": solo.get(m),
-                "prev": prev_cmp.get(m, {}).get("prev"),
-            }
-            for m in worst
-        },
-        "queries_truncated": 0,
-        "queries": {},
-    }
-    room = SUMMARY_LINE_BUDGET - len(json.dumps(base))
-    fitted = _fit_queries(per_query, max(room, 0))
-    base["queries"] = fitted
-    base["queries_truncated"] = max(n - len(fitted), 0)
-    return json.dumps(base)
 
 
 if __name__ == "__main__":

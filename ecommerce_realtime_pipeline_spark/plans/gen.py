@@ -93,6 +93,8 @@ def _produced_topics_fixture(
     # reap, cross-process build-once guard) — reuse it, don't fork it
     from ecommerce_realtime_pipeline_spark.plans import llm as _llm
 
+    # raises TypeError on a non-primitive kwarg (settings=, metrics=):
+    # such a spec has no stable key, so it must not be memoized
     key = _json.dumps({"repeats": repeats, **produce_kw}, sort_keys=True)
     app_id = spark.sparkContext.applicationId
     path = os.path.join(
@@ -126,7 +128,8 @@ def _memo_publisher(spark: SparkSession, topics_dir: str, *counts, **kw):
     resolve the memoized topic tree for this spec and HARDLINK it into
     the caller's work dir (the envelope files are immutable inputs;
     linking ~a dozen KB-files is sub-millisecond against the ~2 s
-    publish it replaces on a warm session). Returns the recorded
+    publish it replaces on a warm session; files are copied instead
+    where a link fails, e.g. across filesystems). Returns the recorded
     counts — byte-identical to what the real publish returned when the
     fixture was built."""
     import shutil
@@ -142,10 +145,16 @@ def _memo_publisher(spark: SparkSession, topics_dir: str, *counts, **kw):
         event_count=kw.pop("event_count", event_count),
         **kw,
     )
+    def _link_or_copy(a: str, b: str) -> None:
+        try:
+            os.link(a, b)
+        except OSError:  # EXDEV: work dir on another filesystem
+            shutil.copy2(a, b)
+
     shutil.copytree(
         src,
         topics_dir,
-        copy_function=os.link,
+        copy_function=_link_or_copy,
         dirs_exist_ok=True,
         ignore=shutil.ignore_patterns("_counts.json*", "*.build-lock"),
     )

@@ -114,9 +114,9 @@ def test_attach_lifecycle_prev(tmp_path, monkeypatch):
 
 
 def test_close_round_picks_full_artifact_not_summary(tmp_path):
-    """tools/close_round.py must select the FULL bench artifact (the
-    line carrying "metric"), not the compact bench_summary line that
-    bench.py prints last for the driver's 2000-char stdout tail."""
+    """tools/close_round.py records the last JSON line carrying
+    "metric" — the full artifact bench.py prints last — and skips
+    non-JSON lines and JSON lines without "metric"."""
     import importlib.util
     import json
 
@@ -129,86 +129,12 @@ def test_close_round_picks_full_artifact_not_summary(tmp_path):
     cr = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cr)
     full = {"metric": "suite_median_wall_sec", "value": 1.0, "queries": {}}
-    # since r14 the summary line carries the driver contract keys too
-    # (metric/value/unit + fitted queries); pick_artifact must still
-    # skip it via the bench_summary marker
-    summary = {
-        "bench_summary": True,
-        "metric": "suite_median_wall_sec",
-        "value": 1.0,
-        "unit": "sec",
-        "suite_sec": 1.0,
-        "n": 0,
-        "queries": {"a": 1.0},
-    }
-    stdout = "\n".join(["# noise", json.dumps(full), json.dumps(summary)])
+    stdout = "\n".join(
+        ["# noise", json.dumps({"not_metric": 1}), json.dumps(full), "# tail"]
+    )
     assert cr.pick_artifact(stdout) == json.dumps(full)
     assert cr.pick_artifact("no json here\n{not json}") is None
-    assert cr.pick_artifact(json.dumps(summary)) is None  # summary alone
-
-
-def test_summary_line_stays_under_driver_tail_at_250_queries():
-    """The truncation-proof contract at registry growth (r11 verdict
-    task 7): simulate a 250-query registry where EVERY query moved
-    (the pathological movers dict that ballooned r11's tail) — the
-    final summary line must stay under 1800 chars (the driver keeps
-    2000), i.e. the movers cap and the queries auto-fit do their job
-    with long query names."""
-    names = [f"docs_extremely_long_query_name_number_{i:04d}" for i in range(250)]
-    per_query = {n: 1.2345 for n in names}
-    prev_cmp = {
-        n: {
-            "prev": 0.5,
-            "cur": 1.2345,
-            "ratio": 2.469,
-            "adj_ratio": 2.469,
-            "mover": True,
-        }
-        for n in names
-    }
-    solo = {n: 0.9876 for n in names}
-    line = bench.summary_line(
-        308.1234, 250, 0.1, list(names), prev_cmp, per_query, solo, 1.013,
-        perquery_path="/root/repo/BENCH_PERQUERY_c32.json",
-    )
-    assert len(line) < 1800, len(line)
-    import json
-
-    parsed = json.loads(line)
-    assert parsed["bench_summary"] is True and parsed["n"] == 250
-    assert len(parsed["movers"]) == bench.SUMMARY_MOVERS_CAP
-    # r13 verdict task 1: the driver contract keys ride the final line
-    assert parsed["metric"] == "suite_median_wall_sec"
-    assert parsed["value"] == 308.1234 and parsed["unit"] == "sec"
-    assert parsed["bench_perquery_path"].endswith("BENCH_PERQUERY_c32.json")
-    # the fitted queries map is non-empty, size-capped, and counts its
-    # own truncation honestly
-    assert parsed["queries"] and len(parsed["queries"]) < 250
-    assert parsed["queries_truncated"] == 250 - len(parsed["queries"])
-
-
-def test_summary_line_small_registry_carries_full_queries_map():
-    """Below the tail budget nothing is truncated: every query rides
-    the final line, so a small-registry driver parse sees the complete
-    map (the r02 behavior, restored for any registry that fits)."""
-    import json
-
-    per_query = {f"q{i:02d}": round(0.1 * i, 4) for i in range(20)}
-    line = bench.summary_line(
-        10.0, 20, 0.1, [], {}, per_query, {}, 1.0, perquery_path="/x.json"
-    )
-    parsed = json.loads(line)
-    assert parsed["queries"] == per_query
-    assert parsed["queries_truncated"] == 0
-
-
-def test_fit_queries_descending_cost_and_budget():
-    per_query = {"cheap": 0.1, "mid": 1.0, "heavy": 9.0, "skip": None}
-    fitted = bench._fit_queries(per_query, 10_000)
-    assert list(fitted) == ["heavy", "mid", "cheap"]  # descending cost
-    tiny = bench._fit_queries(per_query, len('"heavy": 9.0') + 4)
-    assert list(tiny) == ["heavy"]  # budget admits only the worst
-    assert bench._fit_queries(per_query, 0) == {}
+    assert cr.pick_artifact(json.dumps({"value": 1.0})) is None
 
 
 def test_adopt_solo_replaces_headline_and_keeps_old_number():
@@ -221,34 +147,3 @@ def test_adopt_solo_replaces_headline_and_keeps_old_number():
     displaced = bench._adopt_solo(per_query, solo)
     assert per_query == {"a": 0.26, "b": 0.3, "c": 1.0}
     assert displaced == {"a": 5.05}
-
-
-def test_write_perquery_roundtrip(tmp_path, monkeypatch):
-    """The sidecar carries the FULL queries map at the path the summary
-    line advertises — the driver-readable channel for 213 queries that
-    cannot fit the 2000-char stdout tail."""
-    import json
-
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
-    out = {
-        "metric": "suite_median_wall_sec",
-        "value": 1.5,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {"a": 1.0, "b": 0.5},
-        "queries_concurrent_median": {"a": 2.0},
-        "solo_sec": {"a": 1.0},
-        "env_drift": 0.99,
-        "movers": [],
-        "suite_runs_sec": [1.6, 1.5, 1.5],
-    }
-    real = os.path.join
-    monkeypatch.setattr(
-        bench.os.path, "dirname", lambda p: str(tmp_path)
-    )
-    path = bench._write_perquery(out)
-    assert path == real(str(tmp_path), "BENCH_PERQUERY_c8.json")
-    doc = json.loads(open(path).read())
-    assert doc["queries"] == out["queries"]
-    assert doc["cpus"] == 8
-    assert doc["queries_concurrent_median"] == {"a": 2.0}

@@ -167,3 +167,52 @@ def test_produced_topics_fixture_memoizes_and_matches_real_publish(
         **{**spec, "customer_count": 8},
     )
     assert calls["n"] == before + 1
+
+
+def test_memo_publisher_copies_when_hardlink_fails(spark, tmp_path, monkeypatch):
+    """A work dir on another filesystem than the fixture makes os.link
+    fail with EXDEV; the memo publisher then copies each file, so the
+    caller gets the same tree and the same counts."""
+    import errno
+    import os
+
+    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+
+    spec = dict(
+        product_count=0, customer_count=5, order_count=0, event_count=0,
+        seed=41, n_partitions=2, entities=("customers",),
+    )
+    linked = str(tmp_path / "linked")
+    counts = GP._memo_publisher(spark, linked, **spec)
+
+    def cross_device(src, dst, **_kw):
+        raise OSError(errno.EXDEV, "Invalid cross-device link", src)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    copied = str(tmp_path / "copied")
+    assert GP._memo_publisher(spark, copied, **spec) == counts
+
+    def _tree(root):
+        out = {}
+        for dp, _dn, fns in os.walk(root):
+            for fn in fns:
+                p = os.path.join(dp, fn)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, root)] = fh.read()
+        return out
+
+    assert _tree(copied) == _tree(linked) and _tree(copied)
+
+
+def test_memo_key_rejects_non_primitive_kwargs(spark):
+    """The topic-tree memo key is a JSON dump of the spec: a kwarg that
+    has no JSON form (a Settings object, a metrics sink) raises
+    TypeError before anything is built, rather than being memoized
+    under an unstable key."""
+    import pytest
+
+    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+    from ecommerce_realtime_pipeline_spark.settings import Settings
+
+    with pytest.raises(TypeError):
+        GP._produced_topics_fixture(spark, customer_count=3, settings=Settings())

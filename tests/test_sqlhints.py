@@ -73,7 +73,9 @@ def test_every_registered_oracle_explains_in_duckdb():
     SQL: every oracle (post-materialization-hint) must PLAN in DuckDB.
     A hint rewrite that produced invalid SQL — or an oracle typo —
     fails here in milliseconds instead of burning a driver
-    CORRECTNESS row."""
+    CORRECTNESS row. Also pins the registry: ``queries()`` is exactly
+    the union of the five plan-module oracle tables, each name mapped
+    to the function of that name in its module."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -87,8 +89,33 @@ def test_every_registered_oracle_explains_in_duckdb():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
+    from ecommerce_realtime_pipeline_spark.plans import (
+        dq,
+        gen,
+        kpi,
+        llm,
+        oracles as kpi_oracles,
+        temporal,
+    )
+
+    tables = (
+        (kpi, kpi_oracles.KPI_ORACLES),
+        (dq, dq.DQ_ORACLES),
+        (temporal, temporal.TEMPORAL_ORACLES),
+        (gen, gen.GEN_ORACLES),
+        (llm, llm.LLM_ORACLES),
+    )
+    queries = entry.queries()
     oracles = entry.oracle_sql()
-    assert len(oracles) == len(entry.queries())  # full coverage, no gaps
+    # the registry is the union of the five oracle tables: no name is
+    # shadowed when they merge, and every query has exactly one oracle
+    assert len(queries) == sum(len(t) for _, t in tables) == 213
+    assert set(oracles) == set(queries)
+    for mod, table in tables:
+        for name in table:
+            fn = queries[name]
+            assert fn is getattr(mod, name), name
+            assert (fn.__module__, fn.__name__) == (mod.__name__, name)
     for name, sql in oracles.items():
         try:
             con.execute(f"EXPLAIN {sql}")

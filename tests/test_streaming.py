@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
@@ -113,6 +114,11 @@ def test_listener_captures_progress(spark, dirs):
     try:
         _write_file(dirs["src"], "b1.json", [_envelope_line(1, "c1", "c1@x.com")])
         _run(spark, dirs)
+        # progress events reach the listener asynchronously, possibly
+        # after the query has terminated: wait (bounded) for the first
+        deadline = time.time() + 30
+        while not listener.rows and time.time() < deadline:
+            time.sleep(0.05)
     finally:
         spark.streams.removeListener(listener)
     stats = listener.to_df(spark)

@@ -33,19 +33,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def pick_artifact(stdout: str) -> str | None:
-    """The FULL bench artifact line from bench.py stdout: scan from
-    the END for the first JSON object carrying ``"metric"`` and NOT
-    ``"bench_summary"`` — bench.py prints a compact ``bench_summary``
-    adjudication line AFTER the artifact (for the driver's 2000-char
-    stdout tail; since r14 it carries the driver contract keys too,
-    so the summary-line marker must be excluded explicitly), and
-    trailing non-JSON prints must be skipped, never recorded."""
+    """The bench artifact line from bench.py stdout: the last JSON
+    object carrying ``"metric"``. Trailing non-JSON prints are skipped,
+    never recorded."""
     for line in reversed([l for l in stdout.splitlines() if l.strip()]):
         try:
             obj = json.loads(line)
         except ValueError:
             continue
-        if isinstance(obj, dict) and "metric" in obj and not obj.get("bench_summary"):
+        if isinstance(obj, dict) and "metric" in obj:
             return line
     return None
 
@@ -88,7 +84,7 @@ def main() -> int:
         return proc.returncode
     last = pick_artifact(proc.stdout)
     if last is None:
-        print("ERROR: bench.py stdout carried no full-artifact JSON line; artifact not written", file=sys.stderr)
+        print("ERROR: bench.py stdout carried no artifact JSON line; artifact not written", file=sys.stderr)
         return 3
     out = os.path.join(REPO, f"BENCH_LOCAL_r{rnd:02d}.json")
     with open(out, "w") as fh:
